@@ -22,8 +22,11 @@ object Explain {
     val audit = args.headOption.contains("--audit")
     val rest = if (audit) args.drop(1) else args
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (rest.length > 1) rest.drop(1).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
+    // an unknown name prints one line; the remaining names still run
+    val (names, unknown) = (if (rest.length > 1) rest.drop(1).toSeq
+      else SparkEntry.queries.keys.toSeq.sorted)
+      .partition(SparkEntry.queries.contains)
+    unknown.foreach(n => println(s"unknown query: $n"))
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")

@@ -98,11 +98,6 @@ object SparkEntry {
                                  outBase: String, params: String = "")
                                 (build: String => Unit): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
-    def deepSig(f: java.io.File): String =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .map(deepSig).mkString(",")
-      else s"${f.getName}:${f.length}:${f.lastModified}"
     // the layout salt invalidates artifacts written under a superseded
     // on-disk contract (v3 = epoch-stamped inverted-index postings;
     // v2 = MANIFEST-versioned index generations) even when the source
@@ -112,7 +107,8 @@ object SparkEntry {
     // without it, editing e.g. the simgraph Jaccard threshold would
     // silently keep serving edges built at the old threshold until
     // someone remembered to bump the global salt (round-13 advice).
-    val sig = s"v3:$params:" + deepSig(new java.io.File(s"$dir/$srcRel"))
+    val sig =
+      s"v3:$params:" + Tables.fileSig(new java.io.File(s"$dir/$srcRel"))
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(12)
@@ -1182,7 +1178,7 @@ object SparkEntry {
           files = Sources.filesForTargetSize(s"$dir/lineitem.parquet",
             targetBytes = 4L << 20))
       }
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .filter(col("l_partkey").between(20, 120) &&
           col("l_suppkey").between(3, 7))
         .groupBy("l_suppkey")
@@ -3564,7 +3560,7 @@ object SparkEntry {
       val M = 1000000007L
       val mh = pmod(TextFunctions.fnv64(concat(
         col("doc_id").cast("string"), lit(":"), col("text"))), lit(M))
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .select(col("shard").cast("long").as("shard"), col("pos"),
           pmod((col("pos") + 1) * mh, lit(M)).as("term"))
         .groupBy("shard").agg(
@@ -3913,7 +3909,7 @@ object SparkEntry {
             "text"),
           nMerges = 10, path = p)
       }
-      val vocab = s.read.parquet(vocabPath)
+      val vocab = Tables.parquet(s, vocabPath)
         .select(col("word"), size(col("syms")).cast("long").as("n_syms"))
       // the holdout slice arrives with a token the frozen vocab has never
       // seen (q89's suffix trick) so the char-fallback/OOV arm is
@@ -4326,7 +4322,7 @@ object SparkEntry {
           .select(col("id_a").as("src"), col("id_b").as("dst"))
           .write.mode("overwrite").parquet(s"$p/edges.parquet")
     }
-    s.read.parquet(s"$path/edges.parquet")
+    Tables.parquet(s, s"$path/edges.parquet")
   }
 
 
@@ -4665,7 +4661,7 @@ object SparkEntry {
               concat(col("text"), lit(" v2edit")).as("text")),
           "doc_id", "text", p, batchId = 1L)
       }
-      val e1 = s.read.parquet(s"$idx/edges_v1.parquet")
+      val e1 = Tables.parquet(s, s"$idx/edges_v1.parquet")
         .select(col("id_a"), col("id_b"), lit(1L).as("__in1"))
       val e2 = operators.SimGraphIndex.edges(s, idx)
         .select(col("id_a"), col("id_b"), lit(1L).as("__in2"))

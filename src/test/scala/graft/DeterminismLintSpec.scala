@@ -82,6 +82,43 @@ class DeterminismLintSpec extends SparkSpec {
     assert(lint(fixed).isEmpty, lint(fixed).toString)
   }
 
+  /** Direct parquet reads (`.read.parquet(`, also split across lines)
+    * in the given `(file, source)` pairs, as `file:line`. The engine's
+    * batch parquet reads go through Tables.parquet, the one reader that
+    * memoizes schema inference; a bare read brings back one inference
+    * job per call.
+    */
+  private def directParquetReads(srcs: Seq[(String, String)]): Seq[String] =
+    srcs.flatMap { case (file, src) =>
+      """\.read\s*\.parquet\(""".r.findAllMatchIn(src).map { m =>
+        s"$file:${src.substring(0, m.start).count(_ == '\n') + 1}"
+      }
+    }
+
+  test("operators and SparkEntry read parquet only through Tables") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = java.nio.file.Files.list(root.resolve("operators"))
+      .iterator().asScala.toSeq :+ root.resolve("SparkEntry.scala")
+    val srcs = files.filter(_.toString.endsWith(".scala")).sorted
+      .map(f => f.toString -> java.nio.file.Files.readString(f))
+    assert(srcs.size > 10, srcs.map(_._1).toString)
+    val hits = directParquetReads(srcs)
+    assert(hits.isEmpty, "direct .read.parquet( outside Tables — use " +
+      s"Tables.parquet: ${hits.mkString(", ")}")
+  }
+
+  test("the parquet-read lint fires on a deliberately-planted read") {
+    val planted = Seq("Planted.scala" ->
+      """val a = Tables.parquet(spark, p)
+        |val b = spark.read.parquet(p)
+        |val c = sp.read
+        |  .parquet(q)
+        |""".stripMargin)
+    assert(directParquetReads(planted) == Seq("Planted.scala:2",
+      "Planted.scala:3"))
+  }
+
   test("no serving query runs an in-line corpus-linear recall audit " +
       "(round-17 verdict #1: certificates, not per-query brute force)") {
     // The production-probe rows (q164/q169/q173) must enforce their

@@ -593,6 +593,29 @@ class RelationalSpec extends SparkSpec {
     assert(e.getMessage.contains("exceeds Long range"), e.getMessage)
   }
 
+  test("rankSweepAgg: a single (key, value) total past Long range is " +
+      "refused, not wrapped (guard reads the raw rows, not the collapse)") {
+    // both rows share one (k, v) group, so the collapse's LONG sum is
+    // the one that overflows. Under ANSI that sum fails on its own; with
+    // ANSI off it wraps to Long.MinValue, and a guard folding the wrapped
+    // total would let the sweep run on garbage.
+    val big = Seq(("k", 1.0, Long.MaxValue), ("k", 1.0, 1L))
+      .toDF("k", "v", "m")
+    val p2 = Seq(("p", 1.5, 1L, true)).toDF("pg", "x", "sgn", "le")
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        Relational.rankSweepAgg(big, p2,
+          crossKeys = Seq("k"), matchKeys = Seq.empty,
+          vCol = "v", measures = Seq("m"),
+          probeKeys = Seq("pg"), xCol = "x", signCol = "sgn", leCol = "le")
+      }
+      assert(e.getMessage.contains("exceeds Long range"), e.getMessage)
+      assert(e.getMessage.contains("9223372036854775808"), e.getMessage)
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
   test("profile: null handling, exact distincts, and non-numeric slots") {
     val df = Seq(
       (Some(1L), Some("a"), Some(2.5)),
