@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: prints the formatted physical plan for selected
   * queries so scan pushdown (PushedFilters/ReadSchema), broadcast joins,
   * and WholeStageCodegen spans can be audited per round.
@@ -27,13 +25,7 @@ object Explain {
       else SparkEntry.queries.keys.toSeq.sorted)
       .partition(SparkEntry.queries.contains)
     unknown.foreach(n => println(s"unknown query: $n"))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     if (audit) {

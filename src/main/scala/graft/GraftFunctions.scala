@@ -62,7 +62,8 @@ object GraftFunctions {
 
 /** `spark.sql.extensions` entry point: injects every graft function into
   * the session builder so ALL sessions (including thrift/connect ones the
-  * application never touches imperatively) see the SQL surface.
+  * application never touches imperatively) see the SQL surface. It
+  * injects functions only: planning stays stock Spark's.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -70,7 +71,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((new FunctionIdentifier(name),
         new ExpressionInfo("graft", name), b))
     }
-    // opt-in (spark.graft.topkRewrite.enabled): window-top-k → partial agg
-    ext.injectOptimizerRule(_ => graft.plans.RewriteTopKWindow)
   }
 }

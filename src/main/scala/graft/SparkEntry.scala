@@ -149,6 +149,27 @@ object SparkEntry {
     out
   }
 
+  /** Top-3 users per event type by a row_number window — q02's body, and
+    * q58's under its plan assertion. Spark plans the `rn <= 3` filter as a
+    * partial WindowGroupLimit before the exchange and a final one after.
+    */
+  private def topUsersPerType(s: SparkSession, dir: String): DataFrame = {
+    val counts = Tables.events(s, dir)
+      .groupBy("event_type", "user_id").agg(count(lit(1)).as("cnt"))
+    Relational.topKPerGroup(counts, Seq("event_type"), col("cnt"), 3,
+        Seq(col("user_id")))
+      .withColumn("rn", col("rn").cast("long"))
+      .select("event_type", "user_id", "cnt", "rn")
+      .orderBy("event_type", "rn")
+  }
+
+  /** Whether a physical plan string has a WindowGroupLimit in Partial mode
+    * (the pre-shuffle half of Spark's split top-k-per-group limit).
+    */
+  def hasPartialWindowGroupLimit(plan: String): Boolean =
+    plan.linesIterator.exists(l =>
+      l.contains("WindowGroupLimit ") && l.trim.endsWith(", Partial"))
+
   /** q82's pass-1 frame: the ONE aggregate job computing N and the
     * k=2048-counter Misra-Gries candidate summary. The query builder
     * EXECUTES this (driver collect of a driver-sized-by-construction
@@ -433,15 +454,7 @@ object SparkEntry {
 
     // Top-N-per-group as a window function (idiomatic upgrade of
     // log_mining_analysis.py:43-51's three filtered+sorted frames).
-    "q02_top_users_per_type" -> ((s, dir) => {
-      val counts = Tables.events(s, dir)
-        .groupBy("event_type", "user_id").agg(count(lit(1)).as("cnt"))
-      Relational.topKPerGroup(counts, Seq("event_type"), col("cnt"), 3,
-          Seq(col("user_id")))
-        .withColumn("rn", col("rn").cast("long"))
-        .select("event_type", "user_id", "cnt", "rn")
-        .orderBy("event_type", "rn")
-    }),
+    "q02_top_users_per_type" -> topUsersPerType,
 
     // Distribution + percentage column (Claims_Prediction.py:46-47,67-77).
     "q03_status_distribution" -> ((s, dir) =>
@@ -3246,28 +3259,17 @@ object SparkEntry {
         .orderBy("q_id", "rn")
     }),
 
-    // ---- Top-k window rewrite, gated on the REWRITTEN plan -------------
-    // q02's query under GraftExtensions' RewriteTopKWindow: the isolated
-    // session (private SQLConf + ExperimentalMethods — the flag and rule
-    // never leak into concurrently-running queries) opts in, and the
-    // require() proves the oracle-checked result came from the bounded-heap
-    // topkrows aggregate, not the row_number window.
+    // ---- Top-k per group: Spark's native partial limit, asserted -------
+    // q02's query. The require() proves the executed plan keeps Spark's
+    // partial WindowGroupLimit below the exchange, so at most k rows per
+    // group per partition cross the shuffle; a Spark upgrade that stops
+    // inferring the pre-shuffle limit fails this row instead of silently
+    // shuffling every input row into one reducer per group.
     "q58_topk_rewrite" -> ((s, dir) => {
-      val s2 = s.newSession()
-      s2.experimental.extraOptimizations = Seq(plans.RewriteTopKWindow)
-      s2.conf.set("spark.graft.topkRewrite.enabled", "true")
-      val counts = Tables.events(s2, dir)
-        .groupBy("event_type", "user_id").agg(count(lit(1)).as("cnt"))
-      val df = Relational.topKPerGroup(counts, Seq("event_type"), col("cnt"),
-          3, Seq(col("user_id")))
-        .withColumn("rn", col("rn").cast("long"))
-        .select("event_type", "user_id", "cnt", "rn")
-        .orderBy("event_type", "rn")
+      val df = topUsersPerType(s, dir)
       val plan = df.queryExecution.executedPlan.toString
-      require(plan.contains("topkrows"),
-        "q58 must execute the rewritten bounded-heap plan")
-      require(!plan.contains("Window"),
-        "q58 must not contain a row_number window")
+      require(hasPartialWindowGroupLimit(plan),
+        s"q58 must plan a partial WindowGroupLimit before the shuffle:\n$plan")
       df
     }),
 
@@ -6751,8 +6753,8 @@ object SparkEntry {
              AS test_cnt
          FROM s GROUP BY o_orderstatus ORDER BY o_orderstatus"""
 
-  /** Top-3 users per event type — shared by q02 (window plan) and q58 (the
-    * same query under the opt-in bounded-heap rewrite).
+  /** Top-3 users per event type — the oracle of both q02 and q58, which
+    * run the same query ([[topUsersPerType]]).
     */
   private val topUsersSql: String =
     """SELECT event_type, user_id, cnt, rn FROM (

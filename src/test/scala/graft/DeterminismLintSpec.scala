@@ -82,28 +82,34 @@ class DeterminismLintSpec extends SparkSpec {
     assert(lint(fixed).isEmpty, lint(fixed).toString)
   }
 
-  /** Direct parquet reads (`.read.parquet(`, also split across lines)
-    * in the given `(file, source)` pairs, as `file:line`. The engine's
-    * batch parquet reads go through Tables.parquet, the one reader that
-    * memoizes schema inference; a bare read brings back one inference
-    * job per call.
+  /** Matches of `pattern` (which may span lines) in the given
+    * `(file, source)` pairs, as `file:line`.
     */
-  private def directParquetReads(srcs: Seq[(String, String)]): Seq[String] =
+  private def sourceHits(pattern: scala.util.matching.Regex,
+                         srcs: Seq[(String, String)]): Seq[String] =
     srcs.flatMap { case (file, src) =>
-      """\.read\s*\.parquet\(""".r.findAllMatchIn(src).map { m =>
+      pattern.findAllMatchIn(src).map { m =>
         s"$file:${src.substring(0, m.start).count(_ == '\n') + 1}"
       }
     }
 
+  private def readSources(files: Seq[java.nio.file.Path]): Seq[(String, String)] =
+    files.filter(_.toString.endsWith(".scala")).sorted
+      .map(f => f.toString -> java.nio.file.Files.readString(f))
+
+  /** Direct parquet reads. The engine's batch parquet reads go through
+    * Tables.parquet, the one reader that memoizes schema inference; a
+    * bare read brings back one inference job per call.
+    */
+  private val directParquetRead = """\.read\s*\.parquet\(""".r
+
   test("operators and SparkEntry read parquet only through Tables") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val files = java.nio.file.Files.list(root.resolve("operators"))
-      .iterator().asScala.toSeq :+ root.resolve("SparkEntry.scala")
-    val srcs = files.filter(_.toString.endsWith(".scala")).sorted
-      .map(f => f.toString -> java.nio.file.Files.readString(f))
+    val srcs = readSources(java.nio.file.Files.list(root.resolve("operators"))
+      .iterator().asScala.toSeq :+ root.resolve("SparkEntry.scala"))
     assert(srcs.size > 10, srcs.map(_._1).toString)
-    val hits = directParquetReads(srcs)
+    val hits = sourceHits(directParquetRead, srcs)
     assert(hits.isEmpty, "direct .read.parquet( outside Tables — use " +
       s"Tables.parquet: ${hits.mkString(", ")}")
   }
@@ -115,7 +121,37 @@ class DeterminismLintSpec extends SparkSpec {
         |val c = sp.read
         |  .parquet(q)
         |""".stripMargin)
-    assert(directParquetReads(planted) == Seq("Planted.scala:2",
+    assert(sourceHits(directParquetRead, planted) == Seq("Planted.scala:2",
+      "Planted.scala:3"))
+  }
+
+  /** Session builders. Every session starts from Sessions.local, so the
+    * settings all of them share (UTC, nanosAsLong, AQE, partitions = cores)
+    * cannot drift between copies.
+    */
+  private val sessionBuilder = """SparkSession\s*\.\s*builder\b""".r
+
+  test("only graft.Sessions builds a SparkSession") {
+    import scala.jdk.CollectionConverters._
+    val files = Seq("src/main/scala", "src/test/scala").flatMap { d =>
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
+      try walk.iterator().asScala.toList finally walk.close()
+    }.filterNot(_ == java.nio.file.Paths.get("src/main/scala/graft/Sessions.scala"))
+    val srcs = readSources(files)
+    assert(srcs.size > 50, srcs.map(_._1).toString)
+    val hits = sourceHits(sessionBuilder, srcs)
+    assert(hits.isEmpty, "SparkSession builder outside graft.Sessions — " +
+      s"start from Sessions.local: ${hits.mkString(", ")}")
+  }
+
+  test("the session-builder lint fires on a deliberately-planted builder") {
+    // the planted builders are split across string literals so that this
+    // file's own source stays clear of the scan above
+    val planted = Seq("Planted.scala" -> (
+      "val a = Sessions.local(4).getOrCreate()\n" +
+      "val b = SparkSession" + ".builder().getOrCreate()\n" +
+      "val c = SparkSession\n" + "  .builder\n"))
+    assert(sourceHits(sessionBuilder, planted) == Seq("Planted.scala:2",
       "Planted.scala:3"))
   }
 

@@ -18,6 +18,25 @@ class RelationalSpec extends SparkSpec {
     assert(got.toSeq == Seq(("a", 1L, 1), ("a", 2L, 2), ("b", 1L, 1)))
   }
 
+  test("q02/q58 top-k plans keep Spark's partial WindowGroupLimit, AQE on and off") {
+    // the pre-shuffle limit bounds what crosses the exchange to k rows per
+    // group per partition; q58 must run q02's query, not a rewrite of it
+    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+    try Seq("true", "false").foreach { aqe =>
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      val Seq(q02, q58) = Seq("q02_top_users_per_type", "q58_topk_rewrite")
+        .map(SparkEntry.queries(_)(spark, sf0001))
+      Seq(q02, q58).foreach { df =>
+        val plan = df.queryExecution.executedPlan.toString
+        assert(SparkEntry.hasPartialWindowGroupLimit(plan), s"AQE $aqe:\n$plan")
+        assert(!plan.toLowerCase.contains("topkrows"), s"AQE $aqe:\n$plan")
+      }
+      val want = q02.collect().toSeq
+      assert(want.nonEmpty)
+      assert(q58.collect().toSeq == want, s"AQE $aqe")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+  }
+
   test("distributionWithPct percentages sum to 100") {
     val df = Tables.orders(spark, sf0001)
     val pcts = Relational.distributionWithPct(df, "o_orderstatus")

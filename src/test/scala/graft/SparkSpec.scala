@@ -13,15 +13,10 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Sessions.local(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.warehouse.dir",
         new java.io.File("target/tmp/warehouse").getAbsolutePath)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
